@@ -27,6 +27,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# the synthetic_* fixture generators memoize their payload rows per
+# session: fully deterministic per n, and the bench invokes each
+# generator several times per round (features + segments × 3 runs)
+from ..artifacts import artifact
+
 #: schema of a decoded-image feature row
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [
@@ -853,12 +858,6 @@ def synthetic_videos(spark, n: int = 16, frames_per_video: int = 6) -> DataFrame
     """
     import numpy as np
 
-    if ("video", n, frames_per_video) in _SYNTH_CACHE:
-        return spark.createDataFrame(
-            _SYNTH_CACHE[("video", n, frames_per_video)],
-            "media_id long, payload binary",
-        )
-
     def frame(j):
         # dHash sees only horizontal-neighbor ORDERING, so frames must
         # differ in coarse left<right structure: 8 wide column bands
@@ -872,14 +871,17 @@ def synthetic_videos(spark, n: int = 16, frames_per_video: int = 6) -> DataFrame
         g = bits * 180 + (xx % 3) * 20 + 10
         return _encode_jpeg_baseline(g.astype(np.uint8))
 
-    uniq = [frame(j) for j in range(n + frames_per_video)]
-    rows = []
-    for i in range(n):
-        if i % 5 == 4:
-            rows.append((i, b"\x00not mjpeg" + bytes([i] * 32)))
-            continue
-        rows.append((i, b"".join(uniq[i : i + frames_per_video])))
-    _SYNTH_CACHE[("video", n, frames_per_video)] = rows
+    def build():
+        uniq = [frame(j) for j in range(n + frames_per_video)]
+        rows = []
+        for i in range(n):
+            if i % 5 == 4:
+                rows.append((i, b"\x00not mjpeg" + bytes([i] * 32)))
+                continue
+            rows.append((i, b"".join(uniq[i : i + frames_per_video])))
+        return rows
+
+    rows = artifact(spark, "synthetic_media", ("video", n, frames_per_video), build)
     return spark.createDataFrame(rows, "media_id long, payload binary")
 
 
@@ -1256,12 +1258,6 @@ def segment_audio_energy(
     return df.select(id_col, bin_col).mapInPandas(batches, AUDIO_SEGMENTS_SCHEMA)
 
 
-#: memoized synthetic payload lists — fully deterministic per n, and the
-#: bench invokes each generator several times per round (features +
-#: segments × 3 runs); regenerating WAV/JPEG bytes each call is waste.
-_SYNTH_CACHE: dict = {}
-
-
 def synthetic_audio(spark, n: int = 32) -> DataFrame:
     """Deterministic WAV fixtures: (media_id, payload binary) — 16-bit
     mono sine bursts of varying pitch/length, built with the stdlib
@@ -1273,33 +1269,33 @@ def synthetic_audio(spark, n: int = 32) -> DataFrame:
     import struct
     import wave
 
-    if ("audio", n) in _SYNTH_CACHE:
-        return spark.createDataFrame(
-            _SYNTH_CACHE[("audio", n)], "media_id long, payload binary"
-        )
-    rows = []
-    for i in range(n):
-        if i % 8 == 7:
-            rows.append((i, b"not a wav" * 3))
-            continue
-        sr = 8000
-        n_samp = 400 + 50 * (i % 5)
-        freq = 220.0 * (1 + i % 4)
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(sr)
-            w.writeframes(
-                b"".join(
-                    struct.pack(
-                        "<h", int(12000 * math.sin(2 * math.pi * freq * t / sr))
+    def build():
+        rows = []
+        for i in range(n):
+            if i % 8 == 7:
+                rows.append((i, b"not a wav" * 3))
+                continue
+            sr = 8000
+            n_samp = 400 + 50 * (i % 5)
+            freq = 220.0 * (1 + i % 4)
+            buf = io.BytesIO()
+            with wave.open(buf, "wb") as w:
+                w.setnchannels(1)
+                w.setsampwidth(2)
+                w.setframerate(sr)
+                w.writeframes(
+                    b"".join(
+                        struct.pack(
+                            "<h",
+                            int(12000 * math.sin(2 * math.pi * freq * t / sr)),
+                        )
+                        for t in range(n_samp)
                     )
-                    for t in range(n_samp)
                 )
-            )
-        rows.append((i, buf.getvalue()))
-    _SYNTH_CACHE[("audio", n)] = rows
+            rows.append((i, buf.getvalue()))
+        return rows
+
+    rows = artifact(spark, "synthetic_media", ("audio", n), build)
     return spark.createDataFrame(rows, "media_id long, payload binary")
 
 
@@ -1446,32 +1442,31 @@ def synthetic_images(spark, n: int = 64) -> DataFrame:
     bytes (fail-soft path), with content varying by id."""
     import numpy as np
 
-    if ("image", n) in _SYNTH_CACHE:
-        return spark.createDataFrame(
-            _SYNTH_CACHE[("image", n)], "media_id long, payload binary"
-        )
-    rows = []
-    for i in range(n):
-        kind = i % 4
-        if kind == 3:
-            rows.append((i, b"\xff\xd8 truncated garbage" + bytes([i] * 16)))
-            continue
-        w, h = 24 + (i % 3) * 8, 16 + (i % 5) * 8
-        yy, xx = np.mgrid[0:h, 0:w]
-        gray = ((xx * 5 + yy * 3 + i * 11) % 256).astype(np.uint8)
-        # kind 0: plain grayscale; 1: 4:2:0 color; 2: grayscale with
-        # restart markers — all three decoder bitstream layouts
-        rows.append(
-            (
-                i,
-                _encode_jpeg_baseline(
-                    gray,
-                    color_420=(kind == 1),
-                    restart_interval=2 if kind == 2 else 0,
-                ),
+    def build():
+        rows = []
+        for i in range(n):
+            kind = i % 4
+            if kind == 3:
+                rows.append((i, b"\xff\xd8 truncated garbage" + bytes([i] * 16)))
+                continue
+            w, h = 24 + (i % 3) * 8, 16 + (i % 5) * 8
+            yy, xx = np.mgrid[0:h, 0:w]
+            gray = ((xx * 5 + yy * 3 + i * 11) % 256).astype(np.uint8)
+            # kind 0: plain grayscale; 1: 4:2:0 color; 2: grayscale with
+            # restart markers — all three decoder bitstream layouts
+            rows.append(
+                (
+                    i,
+                    _encode_jpeg_baseline(
+                        gray,
+                        color_420=(kind == 1),
+                        restart_interval=2 if kind == 2 else 0,
+                    ),
+                )
             )
-        )
-    _SYNTH_CACHE[("image", n)] = rows
+        return rows
+
+    rows = artifact(spark, "synthetic_media", ("image", n), build)
     return spark.createDataFrame(rows, "media_id long, payload binary")
 
 

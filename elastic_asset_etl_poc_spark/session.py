@@ -28,6 +28,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: half the
+    host's RAM, capped at 24g — a heap larger than the machine swaps or
+    gets OOM-killed instead of spilling."""
+    try:
+        with open("/proc/meminfo") as fh:
+            kb = next(int(l.split()[1]) for l in fh if l.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "24g"
+    return f"{max(1024, min(24 * 1024, kb // 2048))}m"
+
+
 def get_spark(
     app_name: str = "elastic-asset-etl-poc-spark",
     master: str | None = None,
@@ -53,7 +65,8 @@ def get_spark(
         # driver JVM at 1g).  Only honored at JVM launch — a pre-existing
         # session (driver-owned harness) keeps its own setting.
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
         )
         # Dims (region/nation/customer at test SF) should broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -71,11 +71,10 @@ def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     try:
         st = os.stat(path)
         key = (path, fmt, st.st_mtime_ns, st.st_size)
-    except OSError:
+    except OSError:  # a glob or remote path: read uncached
         key = None
-    per_session = _RAW_FRAMES.setdefault(spark, {})
-    if key is not None and key in per_session:
-        return per_session[key]
+    if key is not None and key in _RAW_FRAMES.get(spark, {}):
+        return _RAW_FRAMES[spark][key]
     if fmt == "parquet":
         df = spark.read.parquet(path)
     elif fmt == "orc":  # columnar like parquet: pushdown + pruning intact
@@ -89,7 +88,7 @@ def _read_raw(spark: SparkSession, path: str, fmt: str) -> DataFrame:
     else:
         df = spark.read.json(path)
     if key is not None:
-        per_session[key] = df
+        _RAW_FRAMES.setdefault(spark, {})[key] = df
     return df
 
 
