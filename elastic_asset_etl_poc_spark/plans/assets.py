@@ -10,7 +10,14 @@ Spark phrasing: collapse = window top-1 (one shuffle); the find-or-create
 accumulation = group-and-collect hash aggregation (one shuffle); the
 "attribute comes from the row that *created* the asset" order dependence
 (nodes get their cluster parent from the newest row, lib/collectPods.ts:98-110)
-= top-1 window per node.  Linear, spillable, deterministic.
+= ``max_by`` over (ts, event.id) in that same per-node aggregation.
+Linear, spillable, deterministic.
+
+No intermediate is cached.  Each collector's top-1 frame feeds two
+outputs; when both run in one action (the upsert batch unions all four)
+exchange reuse computes the shared shuffle once.  A cache would add
+nothing within the action and, across actions, pin blocks that AQE
+cannot coalesce and that no caller releases, one set per ``now``.
 
 Deviations (documented, deliberate):
   * ``@timestamp`` is stamped with the caller's pinned ``now`` instead of
@@ -90,7 +97,7 @@ def collect_services(
     top = collapse_top1(sig, "service.name", "@timestamp", tiebreak="event.id")
     if limit_groups:  # Q5 bug-compat switch
         top = top.orderBy(F.col("`@timestamp`").desc()).limit(limit_groups)
-    top = _with_eans(top).cache()  # reused by both asset outputs
+    top = _with_eans(top)
 
     services = top.select(
         F.lit(now).alias("@timestamp"),
@@ -160,7 +167,7 @@ def collect_pods(
     both = time_window(both, "@timestamp", now, lookback_days, "d")
     both = exists_all(both, "kubernetes.pod.uid", "kubernetes.node.name")  # F4 (must ×2)
     top = collapse_top1(both, "kubernetes.pod.uid", "@timestamp", tiebreak="event.id")
-    top = _with_eans(top).cache()
+    top = _with_eans(top)
 
     pods = top.select(
         F.lit(now).alias("@timestamp"),
@@ -178,24 +185,18 @@ def collect_pods(
 
     # The node's cluster parent comes from the row that *creates* the node —
     # the newest pod row for that node (find-or-create in desc sort order,
-    # lib/collectPods.ts:98-110).  Window top-1 per node reproduces it.
-    newest_per_node = collapse_top1(
-        top, "kubernetes.node.name", "@timestamp", tiebreak="event.id"
-    ).select(
-        F.col("`kubernetes.node.name`").alias("__node"),
-        F.col("`orchestrator.cluster.name`").alias("__cluster"),
-    )
-
-    node_children = group_collect_edges(
-        top,
-        owner_cols=["node_ean", "kubernetes.node.name"],
-        edge_cols={"asset.children": "pod_ean"},
-    )
+    # lib/collectPods.ts:98-110).  max_by over (ts, event.id) is that row's
+    # top-1 (a NULL event.id orders lowest, as in collapse_top1's DESC), so
+    # it rides the same per-node aggregate that collects the children.
+    newest = F.struct(F.col("`@timestamp`"), F.col("`event.id`"))
     nodes = (
-        node_children.join(
-            newest_per_node,
-            node_children["`kubernetes.node.name`"] == newest_per_node["__node"],
-            "left",
+        group_collect_edges(
+            top,
+            owner_cols=["node_ean", "kubernetes.node.name"],
+            edge_cols={"asset.children": "pod_ean"},
+            extra_aggs={
+                "__cluster": F.max_by(F.col("`orchestrator.cluster.name`"), newest)
+            },
         )
         .select(
             F.lit(now).alias("@timestamp"),

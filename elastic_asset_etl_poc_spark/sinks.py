@@ -197,6 +197,13 @@ def upsert_assets(
     asset.ean; the parquet-path form here is per-partition atomic (Spark
     commit protocol) but not multi-partition transactional — a table
     format is the deployment answer for that.
+
+    The batch is materialized once: one eager ``localCheckpoint`` feeds
+    the touched-types probe, the store read and the write, so the plan
+    behind ``new_assets`` runs once per call.  An empty batch returns
+    before the store is probed.  When the write returns (or raises), the
+    batch checkpoint and the store-read checkpoint are unpersisted, so a
+    long-lived process running cycle after cycle keeps no blocks behind.
     """
     from pyspark.sql.window import Window
 
@@ -210,43 +217,56 @@ def upsert_assets(
             .drop("__rn")
         )
 
-    new_assets = enforce_asset_schema(new_assets)
-    # Explicit existence probe — a bare try/except around the read would
-    # treat any transient read failure as "first write" and destroy the
-    # store.  The Hadoop FileSystem API resolves the path's own scheme
-    # (local, file:/, hdfs://, s3a://), so a store Spark can read is never
-    # mistaken for absent; real probe errors propagate.
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    store_exists = fs.exists(hpath)
-    if not store_exists:
-        latest_per_ean(new_assets).write.mode("overwrite").partitionBy(
-            "asset.type"
-        ).parquet(path)
-        if verify:
-            _stamp_and_verify(spark, path)
-        return
-    touched = [
-        r[0] for r in new_assets.select(F.col("`asset.type`")).distinct().collect()
-    ]
-    # Partition-pruned read of just the touched types; localCheckpoint
-    # materializes them so the overwrite below doesn't read the files it
-    # is replacing (Spark refuses a same-path read+overwrite otherwise).
-    existing = (
-        spark.read.parquet(path)
-        .filter(F.col("`asset.type`").isin(touched))
-        .localCheckpoint()
-    )
-    latest = latest_per_ean(existing.unionByName(new_assets))
-    (
-        latest.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("asset.type")
-        .parquet(path)
-    )
+    batch = enforce_asset_schema(new_assets).localCheckpoint()
+    checkpoints = [batch]
+    try:
+        touched = [
+            r[0] for r in batch.select(F.col("`asset.type`")).distinct().collect()
+        ]
+        if not touched:  # empty batch: leave the store as it is
+            return
+        # Explicit existence probe — a bare try/except around the read would
+        # treat any transient read failure as "first write" and destroy the
+        # store.  The Hadoop FileSystem API resolves the path's own scheme
+        # (local, file:/, hdfs://, s3a://), so a store Spark can read is never
+        # mistaken for absent; real probe errors propagate.
+        jvm = spark._jvm
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        if not fs.exists(hpath):
+            latest_per_ean(batch).write.mode("overwrite").partitionBy(
+                "asset.type"
+            ).parquet(path)
+        else:
+            # Partition-pruned read of just the touched types; localCheckpoint
+            # materializes them so the overwrite below doesn't read the files
+            # it is replacing (Spark refuses a same-path read+overwrite
+            # otherwise).
+            existing = (
+                spark.read.parquet(path)
+                .filter(F.col("`asset.type`").isin(touched))
+                .localCheckpoint()
+            )
+            checkpoints.append(existing)
+            latest = latest_per_ean(existing.unionByName(batch))
+            (
+                latest.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("asset.type")
+                .parquet(path)
+            )
+    finally:
+        for df in checkpoints:
+            _release_checkpoint(df)
     if verify:
         _stamp_and_verify(spark, path)
+
+
+def _release_checkpoint(df: DataFrame) -> None:
+    """Unpersist the blocks behind a ``localCheckpoint()`` frame; without
+    this every checkpoint stays in the block manager for the session's
+    life."""
+    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _stamp_and_verify(spark, path: str) -> None:

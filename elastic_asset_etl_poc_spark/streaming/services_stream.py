@@ -268,8 +268,7 @@ def run_foreach_batch_upsert(
     from ..sinks import upsert_assets
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # an empty micro-batch returns from upsert_assets untouched
         upsert_assets(batch_df.sparkSession, store_path, batch_df)
 
     query = (

@@ -130,17 +130,20 @@ def _asof_group(
     # exceeds arrow.maxRecordsPerBatch — chunk boundaries are arbitrary,
     # so sorting per chunk would process rows out of time order (lefts
     # enriched with future rights).  Concatenate, then sort ONCE.
+    # Empty chunks are dropped and every value column is float64, so
+    # pd.concat never sees an empty or all-NA column of another dtype.
     chunks = [
         pd.DataFrame(
             {
                 "ts_us": pdf["ts"].astype("datetime64[ns]").astype("int64") // 1000,
                 "is_left": pdf["is_left"],
                 "event_id": pdf["event_id"],
-                "value": pdf["value"],
+                "value": pdf["value"].astype("float64"),
                 "carried": 1,
             }
         )
         for pdf in pdfs
+        if len(pdf)
     ]
     # Re-inject the carried packet as a VIRTUAL right row in the batch's
     # time-sorted merge instead of treating it as "current state": a late
@@ -158,7 +161,7 @@ def _asof_group(
                     "ts_us": [last_rts_us],
                     "is_left": [0],
                     "event_id": [-1],
-                    "value": [last_value],
+                    "value": pd.Series([last_value], dtype="float64"),
                     "carried": [0],  # same-ts in-batch right overwrites it
                 }
             ),
@@ -198,8 +201,11 @@ def _asof_group(
         if len(lefts):
             lr = last_right[lefts]
             has = lr >= 0
-            rts = np.where(has, ts_us[np.maximum(lr, 0)], 0).astype("float64")
-            rts[~has] = np.nan  # → NaT → NULL
+            # int64 µs straight to datetime (float64 is exact only below
+            # 2**53 µs); unmatched lefts are masked to NaT → NULL
+            rts = pd.to_datetime(
+                pd.Series(ts_us[np.maximum(lr, 0)]), unit="us"
+            ).mask(~has)
             rval = np.where(has, val[np.maximum(lr, 0)], np.nan)
             out_df = pd.DataFrame(
                 {
@@ -208,9 +214,7 @@ def _asof_group(
                     "ts": pd.to_datetime(
                         pd.Series(ts_us[lefts]), unit="us"
                     ),
-                    "right_ts_asof": pd.to_datetime(
-                        pd.Series(rts), unit="us"
-                    ),
+                    "right_ts_asof": rts,
                     "right_value_asof": rval,
                 }
             )
@@ -432,7 +436,8 @@ def _ewma_group(
     tail: list = list(state.get[0]) if state.exists else []
     tail = [float("nan") if v is None else float(v) for v in tail]
 
-    chunks = list(pdfs)
+    # same concat hygiene as _asof_group: no empty chunks, float64 values
+    chunks = [pdf.astype({"value": "float64"}) for pdf in pdfs if len(pdf)]
     out_df = None
     if chunks:
         pdf = chunks[0] if len(chunks) == 1 else pd.concat(

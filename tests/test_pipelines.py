@@ -1,6 +1,7 @@
 """Pipeline-level tests over the sf0.001 fixtures + graph invariants."""
 
 import datetime
+import os
 
 from conftest import SF_DIR
 
@@ -205,6 +206,85 @@ def test_upsert_assets_propagates_store_read_errors(spark, tmp_path):
     # the corrupt marker survived — nothing was overwritten
     with open(os.path.join(path, "part-00000.parquet")) as f:
         assert f.read() == "not a parquet file"
+
+
+def _etl_batch(spark, now):
+    """One ETL cycle's upsert batch: both collectors' four asset frames."""
+    services, containers = collect_services(spark, SF_DIR, now)
+    pods, nodes = collect_pods(spark, SF_DIR, now)
+    return services.unionByName(containers).unionByName(pods).unionByName(nodes)
+
+
+def _store_snapshot(path):
+    """Every file under a store (data, _SUCCESS, sidecars) → mtime."""
+    return {
+        os.path.join(d, f): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _dirs, files in os.walk(path)
+        for f in files
+    }
+
+
+def test_upsert_cycles_release_persisted_state(spark, tmp_path):
+    """A long-lived process runs ETL cycle after cycle: neither the
+    collectors nor the upsert may leave blocks persisted behind them."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    path = str(tmp_path / "assets_store")
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    t0 = datetime.datetime(2024, 1, 21, 3)
+    for i in range(4):
+        upsert_assets(spark, path, _etl_batch(spark, t0 + datetime.timedelta(hours=5 * i)))
+    assert jsc.getPersistentRDDs().size() == before
+    assert spark.read.parquet(path).count() > 0
+
+
+def test_upsert_warm_cycle_runs_batch_once(spark, tmp_path):
+    """The batch plan executes once per upsert (one localCheckpoint that
+    the type probe, the store read and the write all consume).  Pinned
+    via the job group's job and completed-task counts of a warm cycle
+    (store present); running the batch plan once per consumer, as the
+    old shape did, took 21 jobs and ~500 tasks here."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    path = str(tmp_path / "assets_store")
+    upsert_assets(spark, path, _etl_batch(spark, datetime.datetime(2024, 1, 21, 3)))
+    batch = _etl_batch(spark, datetime.datetime(2024, 1, 21, 9))
+    sc = spark.sparkContext
+    grp = "upsert_warm_cycle"
+    sc.setJobGroup(grp, grp)
+    try:
+        upsert_assets(spark, path, batch)
+    finally:
+        sc.setJobGroup(None, None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(grp)
+    tasks = sum(
+        st.getStageInfo(s).numCompletedTasks
+        for j in jobs
+        for s in st.getJobInfo(j).stageIds
+        if st.getStageInfo(s) is not None
+    )
+    assert len(jobs) <= 13, len(jobs)
+    assert tasks <= 31, tasks
+
+
+def test_upsert_empty_batch_leaves_store_untouched(spark, tmp_path):
+    """An empty batch returns before it probes or reads the store: no
+    file of the store is rewritten, not even _SUCCESS."""
+    from elastic_asset_etl_poc_spark.sinks import upsert_assets
+
+    path = str(tmp_path / "assets_store")
+    upsert_assets(spark, path, _etl_batch(spark, datetime.datetime(2024, 1, 21, 3)))
+    before = _store_snapshot(path)
+    empty = _etl_batch(spark, datetime.datetime(2020, 1, 1))
+    upsert_assets(spark, path, empty)
+    assert _store_snapshot(path) == before
+
+    # nor does an empty first batch create a store
+    fresh = str(tmp_path / "never_written")
+    upsert_assets(spark, fresh, empty)
+    assert not os.path.exists(fresh)
 
 
 def test_compact_parquet_merges_small_files(spark, tmp_path):

@@ -73,10 +73,12 @@ def test_every_query_budgeted_or_justified():
 def test_all_budgeted_queries_within_plan_budget(spark):
     import __spark_entry__ as e
 
-    # budgets are recorded against uncached plans; a populated cache
-    # (e.g. plans/assets.py's intentional .cache() reuse, hit when other
-    # tests ran first) swaps broadcast exchanges for shuffles over the
-    # InMemoryRelation and shifts the counts
+    # budgets are recorded against uncached plans; a frame an earlier
+    # test left cached (a .cache() inside an operator or a test) makes a
+    # query over the same plan read the InMemoryRelation instead,
+    # swapping broadcast exchanges for shuffles and shifting the counts.
+    # The asset collectors cache nothing: their top-1 frame is shared
+    # through exchange reuse within one action
     spark.catalog.clearCache()
 
     budgets, _ = _load()

@@ -1222,3 +1222,99 @@ def test_session_watermark_eviction_boundary_inclusive(spark):
     q.stop()
     out = spark.table(name).collect()
     assert [(r.user_id, r.n_events) for r in out] == [(1, 1)]
+
+
+class _FakeState:
+    """The slice of ``GroupState`` the pandas state kernels use, so a
+    kernel can be driven directly with hand-built Arrow-shaped chunks."""
+
+    def __init__(self, value=None):
+        self.value = value
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return self.value
+
+    def update(self, value):
+        self.value = value
+
+
+def _asof_chunk(rows):
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "user_id": pd.Series([1] * len(rows), dtype="int64"),
+            "ts": pd.Series([r[0] for r in rows], dtype="datetime64[ns]"),
+            "event_id": pd.Series([r[1] for r in rows], dtype="int64"),
+            "value": pd.Series([r[2] for r in rows], dtype="float64"),
+            "is_left": pd.Series([r[3] for r in rows], dtype="int32"),
+        }
+    )
+
+
+def test_asof_kernel_keeps_exact_us_beyond_2_53():
+    """Timestamps past 2**53 µs (year ~2255) are not exact in float64;
+    the matched right ts must come back to the microsecond."""
+    import pandas as pd
+
+    from elastic_asset_etl_poc_spark.streaming.stateful import _asof_group
+
+    right = pd.Timestamp("2260-06-01 00:00:00.000001")
+    left = pd.Timestamp("2260-06-01 00:00:00.000003")
+    assert right.value // 1000 > 2**53
+    state = _FakeState()
+    (out,) = list(
+        _asof_group(
+            (1,),
+            iter([_asof_chunk([(right, 10, 2.5, 0), (left, 11, None, 1)])]),
+            state,
+        )
+    )
+    assert out["right_ts_asof"].tolist() == [right]
+    assert out["ts"].tolist() == [left]
+    assert state.value == (right.value // 1000, 2.5)
+
+    # an unmatched left still reads as NULL
+    (out,) = list(
+        _asof_group(
+            (1,), iter([_asof_chunk([(left, 12, None, 1)])]), _FakeState()
+        )
+    )
+    assert out["right_ts_asof"].isna().tolist() == [True]
+
+
+def test_state_kernels_skip_empty_and_all_na_chunks():
+    """An empty chunk, an all-NA value chunk and a carried NULL-valued
+    state packet concatenate without pandas' empty/all-NA FutureWarning
+    and without changing the value column's float64 dtype."""
+    import datetime
+    import warnings
+
+    from elastic_asset_etl_poc_spark.streaming.stateful import (
+        _asof_group,
+        _ewma_group,
+    )
+
+    t0 = datetime.datetime(2024, 1, 1)
+    t = [t0 + datetime.timedelta(minutes=i) for i in range(4)]
+    chunks = [
+        _asof_chunk([]),
+        _asof_chunk([(t[1], 1, None, 0), (t[2], 2, None, 1)]),
+        _asof_chunk([(t[3], 3, 4.0, 0)]),
+    ]
+    carried = _FakeState((int(t[0].timestamp() * 1e6), None))
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", FutureWarning)
+        (asof,) = list(_asof_group((1,), iter(chunks), carried))
+        (ewma,) = list(_ewma_group((1,), iter(chunks), _FakeState()))
+    assert asof["right_value_asof"].dtype == "float64"
+    assert asof["event_id"].tolist() == [2]
+    assert asof["right_ts_asof"].tolist() == [t[1]]
+    assert asof["right_value_asof"].isna().tolist() == [True]
+    assert ewma["ewma"].dtype == "float64"
+    assert ewma["event_id"].tolist() == [1, 2, 3]
