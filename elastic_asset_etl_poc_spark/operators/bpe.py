@@ -38,6 +38,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..checkpoints import release
+
 __all__ = ["word_symbol_counts", "bpe_train", "bpe_segment"]
 
 #: tokens are lowercased alphanumeric runs — keeps symbols regex-safe
@@ -92,9 +94,12 @@ def bpe_train(
     never a full sort — checkpointed eagerly so (a) the winner feeds
     both the merge-application cross join and the output merge table
     without recompute, and (b) the only driver action is a 1-row
-    ``head`` emptiness check (corpus exhausted → stop early).
+    ``head`` emptiness check (corpus exhausted → stop early).  The
+    winners stay persisted (the returned table reads them); each word
+    table checkpoint is released once the next one exists, the last
+    one on return.
     """
-    w = words.localCheckpoint(eager=True)
+    w = w_cp = words.localCheckpoint(eager=True)
     merge_rows: list[DataFrame] = []
     for i in range(n_merges):
         best = (
@@ -106,6 +111,7 @@ def bpe_train(
             .localCheckpoint(eager=True)
         )
         if not best.head(1):  # fewer distinct pairs than requested merges
+            release(best)
             break
         b = F.broadcast(
             best.select(
@@ -135,6 +141,9 @@ def bpe_train(
         )
         if i % checkpoint_every == checkpoint_every - 1 or i == n_merges - 1:
             w = w.localCheckpoint(eager=True)
+            release(w_cp)
+            w_cp = w
+    release(w_cp)
     if not merge_rows:
         return words.sparkSession.createDataFrame(
             [],

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..checkpoints import observed_checkpoint, release
+
 
 def group_collect_edges(
     df: DataFrame,
@@ -42,7 +44,6 @@ def pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    broadcast_ranks: bool = True,
 ) -> DataFrame:
     """Fixed-iteration PageRank over an edge frame → (node, rank_scaled):
     ``rank_scaled`` is rank × |nodes| (≈1 for an average node) rounded to
@@ -53,20 +54,20 @@ def pagerank(
     ``(1−damping)/n`` — deterministic by construction (no convergence
     test, so an oracle can replay the same unrolled recurrence).
 
-    Scale shape per iteration with ``broadcast_ranks`` (default): the
-    node-sized share table broadcasts into the edge join, so the edge
-    frame — checkpointed once up front — NEVER shuffles; each round is
-    one map-side join pass plus a partial-agg sum on ``dst``.  Right
-    whenever nodes are dimension-sized relative to edges (entity/
-    co-occurrence graphs).  For web-graph scale where ranks outgrow the
-    broadcast budget, pass ``broadcast_ranks=False``: both sides then
-    hash-join on ``src`` (pre-partition the edge frame on ``src`` so the
-    layout is reused across rounds).  Either way ranks are
-    ``localCheckpoint``-ed per round so lineage stays flat instead of
-    doubling (the classic iterative-plan blowup), and the node count
-    rides a broadcast 1-row frame — no driver ``.count()`` in the plan
-    path.  Dangling nodes (no out-edges) keep teleport mass only; pass a
-    symmetrized edge frame when the graph is undirected.
+    Scale shape per iteration: the node-sized share table broadcasts
+    into the edge join, so the edge frame — checkpointed once up front —
+    NEVER shuffles; each round is one map-side join pass plus a
+    partial-agg sum on ``dst``.  Right whenever nodes are
+    dimension-sized relative to edges (entity/co-occurrence graphs).
+    Ranks are ``localCheckpoint``-ed every third round (and the last) so
+    lineage stays flat instead of doubling (the classic iterative-plan
+    blowup); each rank checkpoint is released once its successor exists,
+    and the edge and out-degree checkpoints once the last round has
+    materialized, so a call leaves only the node set and the final ranks
+    persisted.  The node count rides a broadcast 1-row frame — no driver
+    ``.count()`` in the plan path.  Dangling nodes (no out-edges) keep
+    teleport mass only; pass a symmetrized edge frame when the graph is
+    undirected.
     """
     # the edge frame and its degree table feed EVERY iteration — left
     # lazy, the upstream edge derivation (often a fact-table join) would
@@ -89,15 +90,14 @@ def pagerank(
     ranks = nodes.crossJoin(n1).select(
         "node", (F.lit(1.0) / F.col("__n")).alias("rank")
     )
+    ranks_cp = None
     for it in range(iters):
         shares = ranks.join(out_deg, "node").select(
             F.col("node").alias("src"),
             (F.col("rank") / F.col("__out")).alias("__share"),
         )
-        if broadcast_ranks:
-            shares = F.broadcast(shares)
         contribs = (
-            e.join(shares, "src")
+            e.join(F.broadcast(shares), "src")
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("__share").alias("__in"))
         )
@@ -116,6 +116,10 @@ def pagerank(
         # without paying an eager job barrier per iteration
         if it % 3 == 2 or it == iters - 1:
             ranks = ranks.localCheckpoint(eager=True)
+            release(ranks_cp)
+            ranks_cp = ranks
+    # the returned frame reads only the final ranks and ``nodes`` (n1)
+    release(e, out_deg)
     return ranks.crossJoin(n1).select(
         "node", F.round(F.col("rank") * F.col("__n"), 6).alias("rank_scaled")
     )
@@ -182,7 +186,6 @@ def hits(
     iters: int = 5,
     src: str = "src",
     dst: str = "dst",
-    broadcast_scores: bool = True,
 ) -> DataFrame:
     """HITS hubs-and-authorities over a directed edge frame →
     ``(node, role 'hub'|'authority', score)``, L1-normalized per round.
@@ -197,15 +200,15 @@ def hits(
     never re-shuffles; each of the ``iters`` rounds is two map-side
     broadcast joins (score frames are node-dimension-sized) + two
     partial-agg sums, with the L1 total riding a broadcast 1-row frame
-    — no driver action anywhere.  Pass ``broadcast_scores=False`` for
-    web-graph scale where node frames outgrow the broadcast budget
-    (both sides then hash-join; pre-partition the edge frame on the
-    join key).  Fixed iteration count keeps it oracle-replayable.
+    — no driver action anywhere.  Fixed iteration count keeps it
+    oracle-replayable.  Hub scores checkpoint every second round; the
+    returned (lazy) authority frame reads the newest two hub
+    checkpoints, so each older one is released as a new one lands and
+    a call leaves at most the edge frame plus two hub checkpoints.
     """
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     ).distinct().localCheckpoint(eager=True)
-    bc = F.broadcast if broadcast_scores else (lambda df: df)
     # Normalization is deferred to the END: h and a grow by ~mean-degree
     # per half-round (double overflow needs growth^(2·iters) > 1e308 —
     # not reachable at 5 rounds even on a degree-1000 graph), and the
@@ -217,6 +220,7 @@ def hits(
         "node", F.lit(1.0).alias("h")
     )
     auth = None
+    live: list[DataFrame] = []  # the newest two hub checkpoints
     # NOTE (r16): the LPA lazy-chain fusion was tried here and measured
     # SLOWER (solo 3.74 → 4.58 s): unlike LPA's shuffle-join rounds,
     # each HITS half-round broadcasts its score frame, and a fully lazy
@@ -225,17 +229,20 @@ def hits(
     # and is kept deliberately.
     for it in range(iters):
         auth = (
-            e.join(bc(hubs), e["src"] == hubs["node"])
+            e.join(F.broadcast(hubs), e["src"] == hubs["node"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum("h").alias("a"))
         )
         hubs = (
-            e.join(bc(auth), e["dst"] == auth["node"])
+            e.join(F.broadcast(auth), e["dst"] == auth["node"])
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("a").alias("h"))
         )
         if it % 2 == 1 or it == iters - 1:
             hubs = hubs.localCheckpoint(eager=True)
+            live.append(hubs)
+            if len(live) > 2:
+                release(live.pop(0))
     h_tot = F.broadcast(hubs.agg(F.sum("h").alias("__t")))
     a_tot = F.broadcast(auth.agg(F.sum("a").alias("__t")))
     return (
@@ -284,18 +291,17 @@ def connected_components_star(
     action — one job per contraction round, not two; the count the
     convergence test reads is of exactly the rows the checkpoint
     materialized.  (r17; the exceptAll emptiness probe still runs as
-    its own job, but only on the one round where counts match.)
+    its own job, but only on the one round where counts match.)  Each
+    round's edge checkpoint is released once the next round has
+    materialized and the probe has read it, so only the final star
+    forest stays persisted.
     """
-    from pyspark.sql import Observation
-
     a_col, b_col = pairs.columns[0], pairs.columns[1]
-    obs0 = Observation()
-    edges = (
+    edges, counts = observed_checkpoint(
         pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -323,19 +329,19 @@ def connected_components_star(
         centers = m.select(F.col("u"), F.col("m").alias("v"))
         return nbrs.union(centers).distinct()
 
-    prev_n = obs0.get["n"]
+    prev_n = counts["n"]
     for _ in range(max_iter):
-        obs = Observation()
-        new_edges = (
-            small_star(large_star(edges))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+        new_edges, counts = observed_checkpoint(
+            small_star(large_star(edges)), n=F.count(F.lit(1))
         )
-        n = obs.get["n"]
-        if n == prev_n and new_edges.exceptAll(edges).limit(1).count() == 0:
-            edges = new_edges
+        done = (
+            counts["n"] == prev_n
+            and new_edges.exceptAll(edges).limit(1).count() == 0
+        )
+        release(edges)
+        edges, prev_n = new_edges, counts["n"]
+        if done:
             break
-        edges, prev_n = new_edges, n
 
     # fixpoint is a forest of stars: every edge is (node, component-min)
     nodes = edges.select(F.col("u").alias("node")).union(
@@ -374,9 +380,9 @@ def bfs_khop(
     Scale shape: the frontier never exceeds the node set, dedup happens
     per round BEFORE the next expansion (a node reached twice expands
     once), and at 1000 executors each round is an ordinary partitioned
-    hash join on node id."""
-    from pyspark.sql import Observation
-
+    hash join on node id.  Every round's checkpoint stays persisted
+    (the returned ``visited`` is their union); only an empty final
+    frontier is released."""
     visited = (
         seeds.select(F.col(node_col).alias("node"))
         .distinct()
@@ -390,17 +396,16 @@ def bfs_khop(
         # anti-join read it) — checkpoint it eagerly; the emptiness
         # probe rides the checkpoint job as an observe metric instead
         # of a separate isEmpty() job on the materialized partitions
-        obs = Observation()
-        nxt = (
+        nxt, m = observed_checkpoint(
             frontier.join(edges, frontier["node"] == edges["src"])
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .withColumn("dist", F.lit(d))
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+            .withColumn("dist", F.lit(d)),
+            n=F.count(F.lit(1)),
         )
-        if obs.get["n"] == 0:
+        if m["n"] == 0:
+            release(nxt)
             break
         # visited is a UNION of already-checkpointed rounds — re-reading
         # it is a cheap scan of materialized partitions, so its own
@@ -415,30 +420,32 @@ def kcore_membership(
     edges: DataFrame,
     k: int,
     max_rounds: int = 12,
-    canonical: bool = False,
     max_broadcast_nodes: int = 8_000_000,
 ) -> DataFrame:
     """k-CORE decomposition (membership for fixed k): iteratively peel
     nodes of degree < k until the remaining subgraph is stable — the
     maximal subgraph where every node keeps ≥ k in-subgraph neighbors
     (Seidman 1983), the standard dense-community / engagement-tier
-    extractor.  ``edges`` is directed rows; pass both orientations for
-    an undirected graph.  Returns (node, core_degree) — each surviving
+    extractor.  ``edges`` (``src``, ``dst``) holds each undirected edge
+    ONCE, in either orientation — passing both orientations would count
+    every edge twice.  Returns (node, core_degree) — each surviving
     node with its within-core degree (≥ k by construction, an
     in-frame invariant the hash check pins).
 
-    Each peel round is one map-side-combinable degree agg + a
-    broadcast-sized semi-join on the survivor set, localCheckpointed
-    (the per-round lineage guard shared with star-CC/BFS/MMR).  The
-    loop EXITS on a certified fixpoint — zero nodes below degree k,
-    observed as a metric ON the degree checkpoint job itself (no
-    separate count action, and one round earlier than the old
-    node-count-stable test: when nothing is below k the peel keeps
-    everything, so the degree frame already IS the answer) — and
-    RAISES if ``max_rounds`` passes without convergence — the same
-    self-auditing contract as the DPP query: a run that returns has
-    PROVEN its round bound, so an unrolled fixed-round oracle is exact
-    whenever the query succeeds.
+    Each peel round is one map-side explode of both endpoints into a
+    combiner-friendly degree agg + a semi-join of both edge columns on
+    the survivor set, localCheckpointed (the per-round lineage guard
+    shared with star-CC/BFS/MMR).  The loop EXITS on a certified
+    fixpoint — zero nodes below degree k, observed as a metric ON the
+    degree checkpoint job itself (no separate count action: when
+    nothing is below k the peel keeps everything, so the degree frame
+    already IS the answer) — and RAISES if ``max_rounds`` passes
+    without convergence — the same self-auditing contract as the DPP
+    query: a run that returns has PROVEN its round bound, so an
+    unrolled fixed-round oracle is exact whenever the query succeeds.
+    A round's edge and degree checkpoints are released once the next
+    edge frame has materialized, so a call leaves only the returned
+    degree frame persisted.
 
     Scale shape: peeling is O(rounds) corpus passes where rounds is
     the peel DEPTH of the degree distribution (6 on the suite graph;
@@ -454,121 +461,37 @@ def kcore_membership(
     auto-sizing precedent.  Both paths are property-tested equal; the
     default threshold (~8M single-column ids ≈ tens of MB) tracks the
     practical broadcast comfort zone, not the 8 GB hard cap.
-
-    ``canonical=True`` takes each undirected edge ONCE (any
-    orientation) instead of both directions: degrees come from a
-    map-side explode of the two endpoints into one combiner-friendly
-    agg, and every per-round checkpoint carries HALF the rows.  Wall
-    time measures equivalent at suite scale (the explode costs what
-    the union saved), but the halved checkpoint/shuffle FOOTPRINT is
-    the form that matters when the edge frame is the memory budget —
-    property-tested equal to the doubled path.  Same fixpoint, same
-    core degrees.
     """
-    from pyspark.sql import Observation
-
-    if canonical:
-        return _kcore_canonical(edges, k, max_rounds, max_broadcast_nodes)
-    cur = edges.localCheckpoint()
-    for _ in range(max_rounds):
-        # ONE degree aggregation per round serves the fixpoint check,
-        # the broadcast size gate AND the survivor filter: the node
-        # count and the below-k count ride the checkpoint job as
-        # observe metrics (no separate count() action), and the
-        # below-k count detects the fixpoint ONE ROUND EARLIER than
-        # the old node-count-stable test — zero nodes below k means
-        # the peel would keep everything, so deg is already the
-        # answer (identical rows; the old form re-derived the same
-        # frame once more just to see the count hadn't moved)
-        obs = Observation()
-        deg = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("__d") < k).cast("long")).alias("n_below"),
-            )
-            .localCheckpoint()
-        )
-        m = obs.get
-        n_nodes = m["n"]
-        if not m["n_below"]:  # None (empty frame) or 0: stable
-            return deg.select(
-                F.col("src").alias("node"),
-                F.col("__d").alias("core_degree"),
-            )
-        keep = deg.filter(F.col("__d") >= k).select("src")
-        # size gate: survivors ≤ n_nodes, observed above
-        bc = F.broadcast if n_nodes <= max_broadcast_nodes else (lambda d: d)
-        cur = (
-            cur.join(bc(keep), "src", "left_semi")
-            .join(
-                bc(keep.select(F.col("src").alias("dst"))), "dst", "left_semi"
-            )
-            .select("src", "dst")
-            .localCheckpoint()
-        )
-    raise RuntimeError(
-        f"kcore_membership: no fixpoint within {max_rounds} rounds — "
-        "the unrolled-oracle contract would be violated; raise "
-        "max_rounds (and the oracle unroll) for this graph"
-    )
-
-
-def _kcore_canonical(
-    edges: DataFrame,
-    k: int,
-    max_rounds: int,
-    max_broadcast_nodes: int = 8_000_000,
-) -> DataFrame:
-    """kcore_membership's half-frame path: one row per undirected edge.
-    Degree = explode both endpoints map-side into one agg (partial
-    combine ships counts, not rows); survivors filter both columns
-    (broadcast vs shuffled semi-join size-gated like the main path)."""
-    from pyspark.sql import Observation
-
     cur = edges.select("src", "dst").localCheckpoint()
     for _ in range(max_rounds):
-        # fixpoint + size-gate counts ride the checkpoint job as
-        # observe metrics; zero below-k nodes exits one round earlier
-        # with the identical frame (see the main path's comment)
-        obs = Observation()
-        deg = (
-            cur.select(
-                F.explode(F.array("src", "dst")).alias("node")
-            )
+        # ONE degree aggregation per round serves the fixpoint check,
+        # the broadcast size gate AND the survivor filter
+        deg, m = observed_checkpoint(
+            cur.select(F.explode(F.array("src", "dst")).alias("node"))
             .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("__d"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("__d") < k).cast("long")).alias("n_below"),
-            )
-            .localCheckpoint()
+            .agg(F.count(F.lit(1)).alias("__d")),
+            n=F.count(F.lit(1)),
+            n_below=F.sum((F.col("__d") < k).cast("long")),
         )
-        m = obs.get
-        n_nodes = m["n"]
         if not m["n_below"]:  # None (empty frame) or 0: stable
-            return deg.select(
-                "node", F.col("__d").alias("core_degree")
-            )
+            release(cur)
+            return deg.select("node", F.col("__d").alias("core_degree"))
         keep = deg.filter(F.col("__d") >= k).select("node")
-        bc = F.broadcast if n_nodes <= max_broadcast_nodes else (lambda d: d)
-        cur = (
+        # size gate: survivors ≤ n, observed above
+        bc = F.broadcast if m["n"] <= max_broadcast_nodes else (lambda d: d)
+        nxt = (
             cur.join(
-                bc(keep.select(F.col("node").alias("src"))),
-                "src",
-                "left_semi",
+                bc(keep.select(F.col("node").alias("src"))), "src", "left_semi"
             )
             .join(
-                bc(keep.select(F.col("node").alias("dst"))),
-                "dst",
-                "left_semi",
+                bc(keep.select(F.col("node").alias("dst"))), "dst", "left_semi"
             )
             .select("src", "dst")
             .localCheckpoint()
         )
+        release(cur, deg)
+        cur = nxt
+    release(cur)
     raise RuntimeError(
         f"kcore_membership: no fixpoint within {max_rounds} rounds — "
         "the unrolled-oracle contract would be violated; raise "
@@ -606,7 +529,10 @@ def label_propagation(
     node-PARTITIONED rank window — never a global window; lineage is
     truncated per round with localCheckpoint, the iterative-operator
     discipline pagerank/bfs/k-core established.  State = one label
-    row per node.
+    row per node: each round's label checkpoint is released once the
+    next has materialized, and the edge checkpoint once the last round
+    has (the ``audit_churn`` result is lazy over both, so it keeps
+    them).
 
     ``audit_churn=True`` adds a ``changed`` boolean — did this node's
     label change in the FINAL round — so a fixed ``rounds`` is
@@ -641,6 +567,7 @@ def label_propagation(
         F.col("__c").desc(), F.col("label").asc()
     )
     if rounds <= 0 and audit_churn:  # degenerate: nothing propagated
+        release(e)
         return labels.select("node", "label", F.lit(False).alias("changed"))
     for rnd in range(rounds):
         final = rnd == rounds - 1
@@ -669,5 +596,8 @@ def label_propagation(
             return ranked.select(
                 "node", "label", (F.col("__self") == 0).alias("changed")
             )
-        labels = ranked.select("node", "label").localCheckpoint(eager=True)
+        new_labels = ranked.select("node", "label").localCheckpoint(eager=True)
+        release(labels)
+        labels = new_labels
+    release(e)
     return labels

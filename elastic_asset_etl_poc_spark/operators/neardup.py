@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..checkpoints import observed_checkpoint, release
 from .text import tokens
 
 
@@ -727,7 +728,9 @@ def dedup_survivors(
     every node takes the min of its own label and its neighbors' labels;
     converged when no label changes (the changed-count rides the
     per-round checkpoint job as an ``observe`` metric — no extra action,
-    lineage cut with localCheckpoint so plans don't snowball).  Dup groups
+    lineage cut with localCheckpoint so plans don't snowball; each
+    round's labels are released once the next round's exist, and the
+    cached edge frame once the loop ends).  Dup groups
     in practice are tiny (pairs/triples), so this converges in 2-3 rounds;
     ``max_iter`` bounds adversarial chains.  The cluster representative
     (and survivor) is the minimum doc id — the same keep-smallest rule as
@@ -797,8 +800,6 @@ def dedup_survivors(
     ).union(pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst")))
     edges = edges.cache()
 
-    from pyspark.sql import Observation
-
     labels = df.select(F.col(id_col).alias("node")).withColumn(
         "label", F.col("node")
     ).localCheckpoint()
@@ -816,17 +817,17 @@ def dedup_survivors(
         nlab = F.least(
             F.col("label"), F.coalesce(F.col("nlabel"), F.col("label"))
         )
-        obs = Observation()
-        new_labels = (
+        new_labels, m = observed_checkpoint(
             labels.join(neigh, labels["node"] == neigh["src"], "left")
             .select(F.col("node"), nlab.alias("label"),
-                    (nlab != F.col("label")).cast("long").alias("__chg"))
-            .observe(obs, F.sum("__chg").alias("changed"))
-            .localCheckpoint()
+                    (nlab != F.col("label")).cast("long").alias("__chg")),
+            changed=F.sum("__chg"),
         )
-        labels = new_labels.select("node", "label")
-        if not obs.get["changed"]:  # None (empty) or 0
+        release(labels)
+        labels = new_labels
+        if not m["changed"]:  # None (empty) or 0
             break
+    edges.unpersist()
     return labels.select(
         F.col("node").alias(id_col),
         F.col("label").alias("cluster"),

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..checkpoints import release
 from .text import tokens
 
 
@@ -137,7 +138,8 @@ def mmr_rerank(
     subtree per step — 2^k plan growth that showed up as a ~15s cold
     analysis/codegen spike at k=5 before truncation (r10 bench
     triage); the checkpoint pins each step to a tiny materialized
-    (queries × step) frame and keeps plan size linear in k.  Scores
+    (queries × step) frame and keeps plan size linear in k; each step's
+    checkpoint is released once the next one exists.  Scores
     stay raw floats of int-ratio inputs, so an oracle replaying the
     same arithmetic picks bit-identical argmaxes.
     """
@@ -195,5 +197,7 @@ def mmr_rerank(
                 score.alias("mmr_score"),
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint()
+        nxt = sel.unionByName(pick).localCheckpoint()
+        release(sel)
+        sel = nxt
     return sel

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .checkpoints import release
 from .schema import ASSET_COLUMNS, KEYWORD_MAX_LEN, SIMPLE_ASSET_SCHEMA
 
 
@@ -256,17 +257,9 @@ def upsert_assets(
                 .parquet(path)
             )
     finally:
-        for df in checkpoints:
-            _release_checkpoint(df)
+        release(*checkpoints)
     if verify:
         _stamp_and_verify(spark, path)
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Unpersist the blocks behind a ``localCheckpoint()`` frame; without
-    this every checkpoint stays in the block manager for the session's
-    life."""
-    df._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _stamp_and_verify(spark, path: str) -> None:

@@ -14,7 +14,9 @@ per-key state model; ``foreachBatch`` is Spark's sanctioned escape
 hatch for cross-key state maintained as a DataFrame.  The state frame
 is ``localCheckpoint``-ed after every fold so lineage does not grow
 with stream length — the same discipline as the iterative graph
-operators (pagerank/HITS per-round checkpoints).
+operators (pagerank/HITS per-round checkpoints) — and the superseded
+state is released, with the fold's own intermediate checkpoints, as
+soon as the new state has materialized.
 
 Correctness: the fold is ASSOCIATIVE in the batch — min-label cluster
 contraction gives the same fixpoint however the stream splits the
@@ -51,9 +53,11 @@ def run_stream_entity_clusters(
     micro-batch's match edges (endpoints = first two columns: new ids
     and/or standing ids).  Each trigger folds one batch with
     ``entity_clusters_incremental`` — cost O(batch + touched clusters),
-    never O(corpus) — and the state advances by localCheckpoint, so a
-    long-running stream holds exactly one materialized assignments
-    frame.
+    never O(corpus) — and the state advances by localCheckpoint.  Once
+    the new state has materialized, every checkpoint its plan read
+    (the superseded state, the operator's quotient graph) is released
+    unless the batch's own frames read it, so a long-running stream
+    holds exactly one materialized assignments frame.
 
     Scale shape: identical to the batch incremental operator per
     trigger (two broadcasts past the corpus-sized state, CC on the
@@ -62,6 +66,7 @@ def run_stream_entity_clusters(
     import shutil
     import tempfile
 
+    from ..checkpoints import release_read_by
     from ..operators.linkage import entity_clusters_incremental
 
     state = {"assign": assignments0.localCheckpoint(eager=True)}
@@ -69,13 +74,12 @@ def run_stream_entity_clusters(
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
+        new_ids, edges = batch_df.select(id_col), edge_fn(batch_df)
         out = entity_clusters_incremental(
-            state["assign"],
-            batch_df.select(id_col),
-            edge_fn(batch_df),
-            id_col=id_col,
+            state["assign"], new_ids, edges, id_col=id_col
         ).select(id_col, "cluster")
         state["assign"] = out.localCheckpoint(eager=True)
+        release_read_by(out, keep=(new_ids, edges))
 
     ckpt = tempfile.mkdtemp(prefix="er_stream_ckpt_")
     try:

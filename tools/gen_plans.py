@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
 """Regenerate PLANS.md: formatted physical plans of the headline queries."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e  # noqa: E402
 from elastic_asset_etl_poc_spark.session import get_spark  # noqa: E402

@@ -6,7 +6,7 @@ iterative-plan experiments).  Checks result equality first, then times
 ROUNDS alternating variants.
 """
 import os, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 os.environ.setdefault("SPARK_GRAFT_PURE_DECODE", "1")
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
